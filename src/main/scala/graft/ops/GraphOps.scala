@@ -1,6 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -71,14 +72,46 @@ object GraphOps {
     * the caller who KNOWS the graph shape keeps the override — but the
     * default no longer assumes the vector fits: a 10^9-node graph now
     * selects the shuffled plan automatically instead of dying at plan
-    * time on a ~16 GB broadcast. `rows` comes from ONE aggregated count
-    * per decision (the sanctioned driver-side scalar), evaluated on the
-    * already-persisted/checkpointed vector.
+    * time on a ~16 GB broadcast. `rows` is the vector's row count: in the
+    * iterative loops it is observed on the job that checkpointed the
+    * vector ([[checkpointRound]]), elsewhere it is one aggregated count
+    * of the persisted vector; it is not evaluated when `explicit` is set.
     */
   private[graft] def decideBroadcast(explicit: Option[Boolean], rows: => Long,
                                      budget: Long,
                                      bytesPerRow: Long = 16L): Boolean =
     explicit.getOrElse(budget > 0 && rows * bytesPerRow <= budget)
+
+  /** One graph-loop round as ONE Spark action: `frame` is eagerly
+    * localCheckpointed under `Dataset.observe`, so the scalars the
+    * driver needs from the round (its row count for the next broadcast
+    * guard, a normalizing max, a convergence count) arrive from the
+    * same job instead of a second action over the checkpoint. Then
+    * `superseded` (a checkpoint returned here earlier, or a persisted
+    * frame) is released: the round that read it is now materialized.
+    * Returns the checkpointed frame and the observed int64 scalars —
+    * the row count at index 0, then `scalars` in order.
+    */
+  private def checkpointRound(frame: DataFrame, superseded: Option[DataFrame],
+                              scalars: Column*): (DataFrame, IndexedSeq[Long]) = {
+    val obs = Observation()
+    val named = (count(lit(1)) +: scalars).zipWithIndex
+      .map { case (c, i) => c.as(s"s$i") }
+    val cp = frame.observe(obs, named.head, named.tail: _*)
+      .localCheckpoint(true)
+    superseded.foreach(release)
+    val got = obs.get
+    (cp, named.indices.map(i => got(s"s$i").asInstanceOf[Long]))
+  }
+
+  /** Free a frame a loop pinned. A localCheckpoint has no CacheManager
+    * entry, so its blocks are dropped through the checkpointed RDD
+    * under its plan; anything else is a persisted frame.
+    */
+  private def release(df: DataFrame): Unit = df.queryExecution.logical match {
+    case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+    case _ => df.unpersist()
+  }
 
   /** Distinct endpoints of the edge list. */
   def nodes(edges: DataFrame): DataFrame =
@@ -315,6 +348,7 @@ object GraphOps {
     // |V| is fixed for the whole propagation — one count decides the path.
     val bc = decideBroadcast(bcastLabels, lbl.count(),
       broadcastBudget(edges.sparkSession))
+    var pinned = lbl
     var it = 0
     var converged = false
     while (it < maxIters && !converged) {
@@ -328,19 +362,18 @@ object GraphOps {
       // The label table is |V| rows, so the checkpointed state is tiny;
       // on a cluster where executor loss matters, swap in reliable
       // checkpoint(), same call site.
-      // prev rides the update row, so the convergence count is a
-      // filter over the just-checkpointed frame — no per-round
-      // next ⋈ lbl join.
-      val next = lbl.join(nbrMin, Seq("node"), "left")
+      // prev rides the update row, so the convergence count is observed
+      // on the checkpoint job itself — no per-round next ⋈ lbl join and
+      // no second action.
+      val (next, stats) = checkpointRound(lbl.join(nbrMin, Seq("node"), "left")
         .select(col("node"),
           least(col("cluster"), coalesce(col("nmin"), col("cluster"))).as("cluster"),
-          col("cluster").as("prev"))
-        .localCheckpoint(true)
-      val changed = next.filter(col("cluster") =!= col("prev")).count()
-      lbl.unpersist()
+          col("cluster").as("prev")),
+        Some(pinned), count(when(col("cluster") =!= col("prev"), 1)))
+      pinned = next
       lbl = next.select("node", "cluster")
       it += 1
-      converged = changed == 0L
+      converged = stats(1) == 0L
     }
     // The final labels are checkpoint-backed, so the inputs can be freed
     // here instead of leaking cache entries for the session's lifetime.
@@ -396,10 +429,11 @@ object GraphOps {
       .union(e.select(col("dst").as("u"), col("src").as("v")))
       .distinct()
       .localCheckpoint(true)
-    var lbl = sym.select(col("u").as("node")).distinct()
-      .select(col("node"), col("node").as("community"))
-      .localCheckpoint(true)
-    val bc = decideBroadcast(bcastLabels, lbl.count(),
+    val (lbl0, init) = checkpointRound(sym.select(col("u").as("node")).distinct()
+      .select(col("node"), col("node").as("community")), None)
+    var pinned = lbl0
+    var lbl = lbl0
+    val bc = decideBroadcast(bcastLabels, init(0),
       broadcastBudget(edges.sparkSession))
     var round = 0
     var converged = false
@@ -410,9 +444,9 @@ object GraphOps {
       // label arriving over an edge) plus the node's own label.
       // The self-vote row carries the node's previous label through
       // both aggregation levels (exactly one non-null prev per node),
-      // so the convergence count is a filter over the checkpointed
-      // frame — no per-round next ⋈ lbl join. Vote counts and the
-      // election are unchanged.
+      // so the convergence count is observed on the checkpoint job —
+      // no per-round next ⋈ lbl join, no second action. Vote counts
+      // and the election are unchanged.
       val cand = sym.join(l, sym("u") === l("node"))
         .select(sym("v").as("node"), l("community"),
           lit(null).cast("long").as("prev"))
@@ -422,16 +456,17 @@ object GraphOps {
         .agg(count(lit(1)).as("c"), max("prev").as("prev"))
       // Plurality election, totally ordered: min over (-count, label)
       // structs ≡ (count desc, label asc) — one agg, no window.
-      val next = cand
+      val (next, stats) = checkpointRound(cand
         .groupBy("node").agg(min(struct((-col("c")).as("nc"),
           col("community").as("community"))).as("m"),
           max("prev").as("prev"))
-        .select(col("node"), col("m.community").as("community"), col("prev"))
-        .localCheckpoint(true)
-      val changed = next.filter(col("community") =!= col("prev")).count()
+        .select(col("node"), col("m.community").as("community"), col("prev")),
+        Some(pinned), count(when(col("community") =!= col("prev"), 1)))
+      pinned = next
       lbl = next.select("node", "community")
-      converged = changed == 0L
+      converged = stats(1) == 0L
     }
+    release(sym)
     if (!converged) throw new IllegalStateException(
       s"labelPropagation did not reach a fixed point in $maxRounds rounds; " +
         "raise maxRounds (or the graph oscillates beyond the lazy damping)")
@@ -845,12 +880,12 @@ object GraphOps {
     * being its degree INSIDE the core (≥ k by construction).
     */
   def kCore(edges: DataFrame, k: Int, maxIters: Int = 40): DataFrame = {
-    var und = edges.filter(col("src") =!= col("dst"))
+    val (und0, init) = checkpointRound(edges.filter(col("src") =!= col("dst"))
       .select(least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
-      .distinct()
-      .localCheckpoint(true)
-    var nEdges = und.count()
+      .distinct(), None)
+    var und = und0
+    var nEdges = init(0)
     var it = 0
     var converged = false
     while (it < maxIters && !converged) {
@@ -858,11 +893,11 @@ object GraphOps {
         .union(und.select(col("b").as("node")))
         .groupBy("node").agg(count(lit(1)).as("deg"))
       val keep = deg.filter(col("deg") >= k).select("node")
-      val next = und
+      val (next, stats) = checkpointRound(und
         .join(keep.withColumnRenamed("node", "a"), Seq("a"), "left_semi")
-        .join(keep.withColumnRenamed("node", "b"), Seq("b"), "left_semi")
-        .localCheckpoint(true)
-      val nNext = next.count()
+        .join(keep.withColumnRenamed("node", "b"), Seq("b"), "left_semi"),
+        Some(und))
+      val nNext = stats(0)
       converged = nNext == nEdges
       und = next
       nEdges = nNext
@@ -910,9 +945,10 @@ object GraphOps {
     var visited = Seq((source, 0)).toDF("node", "dist")
       .localCheckpoint(true)
     var frontier = visited.select("node")
+    var pinnedFrontier = Option.empty[DataFrame]
     // The frontier grows and shrinks per level, so the broadcast
-    // decision is re-made per round from the frontier size just counted
-    // (the count doubles as the emptiness test — no extra action).
+    // decision is re-made per round from the frontier size observed on
+    // its checkpoint job (the count doubles as the emptiness test).
     var frontierRows = 1L
     var depth = 0
     var exhausted = false
@@ -921,19 +957,21 @@ object GraphOps {
       val bc = decideBroadcast(bcastFrontier, frontierRows, budget,
         bytesPerRow = 8L)
       val f = if (bc) broadcast(frontier) else frontier
-      val next = sym.join(f, sym("src") === f("node"))
+      val (next, stats) = checkpointRound(sym.join(f, sym("src") === f("node"))
         .select(sym("dst").as("node")).distinct()
-        .join(visited, Seq("node"), "left_anti")
-        .localCheckpoint(true)
-      frontierRows = next.count()
+        .join(visited, Seq("node"), "left_anti"), pinnedFrontier)
+      pinnedFrontier = Some(next)
+      frontierRows = stats(0)
       if (frontierRows == 0L) exhausted = true
       else {
-        visited = visited
-          .union(next.select(col("node"), lit(depth).as("dist")))
-          .localCheckpoint(true)
+        visited = checkpointRound(visited
+          .union(next.select(col("node"), lit(depth).as("dist"))),
+          Some(visited))._1
         frontier = next
       }
     }
+    pinnedFrontier.foreach(release)
+    release(sym)
     visited
   }
 
@@ -982,10 +1020,10 @@ object GraphOps {
     * rows are unioned with the current vector tagged by origin, and the
     * min-merge aggregate carries BOTH the new distance and the old
     * distance (min over origin-tagged rows) through the same groupBy, so
-    * improvement detection is a residual-free scan of the just-
-    * checkpointed round output — no second join, no second exchange
-    * (previously a per-round left-outer join + count doubled the round
-    * cost). The same scan returns the vector row count, which feeds the
+    * improvement count is observed on the job that checkpoints the
+    * round output ([[checkpointRound]]) — no second join, no second
+    * exchange, no second action. The same observation returns the
+    * vector row count, which feeds the
     * adaptive broadcast guard for the NEXT round ([[decideBroadcast]]):
     * the distance vector grows toward |V| as the frontier expands, so a
     * graph whose reachable set outgrows the broadcast budget flips to
@@ -1000,6 +1038,7 @@ object GraphOps {
     val e = edges.select(col("src"), col("dst"), col("w"))
       .localCheckpoint(true)
     var dist = Seq((source, 0L)).toDF("node", "dist").localCheckpoint(true)
+    var pinned = dist
     var distRows = 1L
     var converged = false
     var round = 0
@@ -1010,25 +1049,26 @@ object GraphOps {
       val relax = e.join(dd, e("src") === dd("node"))
         .select(e("dst").as("node"), (dd("dist") + e("w")).as("dist"),
           lit(0).as("isold"))
-      val merged = dist
+      val (merged, stats) = checkpointRound(dist
         .select(col("node"), col("dist"), lit(1).as("isold"))
         .union(relax)
         .groupBy("node").agg(
           min("dist").as("dist"),
-          min(when(col("isold") === 1, col("dist"))).as("od"))
-        .localCheckpoint(true)
-      val stats = merged.agg(
-        count(when(col("od").isNull || col("dist") < col("od"), lit(1)))
-          .as("improved"),
-        count(lit(1)).as("n")).head()
-      distRows = stats.getLong(1)
-      if (stats.getLong(0) == 0L) converged = true
-      else dist = merged.select("node", "dist")
+          min(when(col("isold") === 1, col("dist"))).as("od")),
+        Some(pinned),
+        count(when(col("od").isNull || col("dist") < col("od"), lit(1))))
+      // A round with no improvement reproduces the vector exactly, so
+      // the merged checkpoint replaces it either way.
+      pinned = merged
+      dist = merged.select("node", "dist")
+      distRows = stats(0)
+      converged = stats(1) == 0L
     }
+    release(e)
     if (!converged)
       throw new IllegalStateException(
         s"sssp did not reach a fixpoint in $maxRounds rounds")
-    dist.select("node", "dist")
+    dist
   }
 
   /** HITS fixed-point scale for hub/authority scores. Smaller than
@@ -1049,57 +1089,58 @@ object GraphOps {
     * h(u) = Σ_{u→v} a(v), rescaled. Nodes without in-links hold
     * authority 0; without out-links, hub 0.
     *
-    * Scale shape: the score vector (≤ 16 B/node) broadcasts into the
-    * edge join under the [[decideBroadcast]] guard — edges never
-    * shuffle; per round the only corpus exchanges are the two keyed
-    * re-aggregations, plus two 1-row max aggregates for the rescale
-    * (in-plan cross joins, no driver collect). Lineage persist-cut
-    * every `persistEvery` rounds.
+    * Scale shape: ONE Spark action per half-round ([[checkpointRound]]).
+    * The round's raw sums (node, raw) are localCheckpointed, and the
+    * same job observes their max and row count. The max normalizes the
+    * scores as a literal — raw · HitsScale div max, 0 everywhere when
+    * the max is 0 — and the row count is the next round's
+    * [[decideBroadcast]] input, so the score vector (≤ 16 B/node)
+    * broadcasts into the edge join and edges never shuffle; the only
+    * corpus exchange per half-round is the keyed re-aggregation.
+    * The first authority round is in-degree × HitsScale (every hub
+    * starts at HitsScale), with no join. A node absent from a round's
+    * raw sums scores 0 there, and the score vectors are never filtered,
+    * so the authority sums cover every edge target and the hub sums
+    * every edge source: one final full outer join (missing side 0)
+    * restores the whole node set. Superseded checkpoints and the
+    * pinned edges are released as the loop goes; only the last two
+    * checkpoints, which back the returned frame, stay pinned.
     */
-  def hitsFixed(edges: DataFrame, iters: Int,
-                bcastScores: Option[Boolean] = None): DataFrame = {
+  def hitsFixed(edges: DataFrame, iters: Int): DataFrame = {
     require(iters >= 1)
-    val e = edges.persist(StorageLevel.MEMORY_AND_DISK)
-    val n0 = nodes(e).persist(StorageLevel.MEMORY_AND_DISK)
-    val bc = decideBroadcast(bcastScores, n0.count(),
-      broadcastBudget(e.sparkSession))
-    // ONE action per half-round: the raw sums are localCheckpoint-
-    // materialized (≤ 16 B/node — cheap, and it keeps lineage from
-    // nesting round over round), and the round's max rides the SAME
-    // checkpointed frame as an in-plan broadcast scalar (a 1-row
-    // cross-joined aggregate over the checkpointed raw — it re-reads
-    // the materialized vector, never the prefix chain, so the loop
-    // stays linear). The previous shape read the max back as a driver
-    // scalar, paying a second action (and its jobs) per half-round.
-    // Guarded div: an all-zero round (max = 0) yields score 0 for every
-    // node — CaseWhen evaluates branches lazily, so the div never runs
-    // against a zero max (the ANSI contract stays loud for real
-    // overflow, silent never).
-    def sumOver(scores: DataFrame, scoreCol: String, joinKey: String,
+    val owned = edges.storageLevel == StorageLevel.NONE
+    val e = if (owned) edges.persist(StorageLevel.MEMORY_AND_DISK) else edges
+    val budget = broadcastBudget(e.sparkSession)
+    case class Half(cp: DataFrame, scores: DataFrame, rows: Long)
+    def settle(raw: DataFrame, prev: Option[Half], scoreCol: String): Half = {
+      val (cp, stats) = checkpointRound(raw, prev.map(_.cp),
+        coalesce(max("raw"), lit(0L)))
+      val mraw = stats(1)
+      val score =
+        if (mraw == 0L) lit(0L) else expr(s"(raw * ${HitsScale}L) div ${mraw}L")
+      Half(cp, cp.select(col("node"), score.as(scoreCol)), stats(0))
+    }
+    def sumOver(from: Half, scoreCol: String, joinKey: String,
                 outKey: String): DataFrame = {
-      val r = if (bc) broadcast(scores) else scores
-      val raw = e.join(r, e(joinKey) === r("node"))
+      val r = if (decideBroadcast(None, from.rows, budget)) broadcast(from.scores)
+        else from.scores
+      e.join(r, e(joinKey) === r("node"))
         .groupBy(e(outKey).as("node")).agg(sum(scoreCol).as("raw"))
-        .localCheckpoint(true)
-      val mx = raw.agg(coalesce(max("raw"), lit(0L)).as("mraw"))
-      n0.join(raw, Seq("node"), "left").crossJoin(broadcast(mx))
-        .select(col("node"),
-          when(col("mraw") === 0L, lit(0L))
-            .otherwise(expr(s"(coalesce(raw, 0L) * ${HitsScale}L) div mraw"))
-            .as(scoreCol))
     }
-    var hub = n0.select(col("node"), lit(HitsScale).as("h_fp"))
-    var auth: DataFrame = null
-    for (_ <- 1 to iters) {
-      auth = sumOver(hub, "h_fp", "src", "dst")
-        .withColumnRenamed("h_fp", "a_fp")
-      hub = sumOver(auth.withColumnRenamed("a_fp", "h_fp"), "h_fp",
-        "dst", "src")
+    var auth = settle(e.groupBy(col("dst").as("node"))
+      .agg((count(col("src")) * HitsScale).as("raw")), None, "a_fp")
+    var hub = settle(sumOver(auth, "a_fp", "dst", "src"), None, "h_fp")
+    for (_ <- 2 to iters) {
+      auth = settle(sumOver(hub, "h_fp", "src", "dst"), Some(auth), "a_fp")
+      hub = settle(sumOver(auth, "a_fp", "dst", "src"), Some(hub), "h_fp")
     }
-    auth.join(hub, "node")
-      .select(col("node"), col("a_fp"), col("h_fp"),
-        (col("a_fp").cast("double") / HitsScale.toDouble).as("auth"),
-        (col("h_fp").cast("double") / HitsScale.toDouble).as("hub"))
+    if (owned) e.unpersist()
+    val a = coalesce(col("a_fp"), lit(0L))
+    val h = coalesce(col("h_fp"), lit(0L))
+    auth.scores.join(hub.scores, Seq("node"), "full_outer")
+      .select(col("node"), a.as("a_fp"), h.as("h_fp"),
+        (a.cast("double") / HitsScale.toDouble).as("auth"),
+        (h.cast("double") / HitsScale.toDouble).as("hub"))
       .orderBy(col("a_fp").desc, col("node"))
   }
 

@@ -862,7 +862,9 @@ object SinkOps {
     * on it and fresh zone maps are written — a table whose head had
     * accumulated DV commits (un-skippable, [[readVersionWhere]]
     * refuses them) returns to being both O(1)-dir AND file-skippable
-    * in the one rewrite.
+    * in the one rewrite. Without `statsCol` the head's own zone-map
+    * declaration is carried over ([[compactStatsCols]]), so a plain
+    * OPTIMIZE never disarms the skip tier.
     */
   def compactVersions(spark: org.apache.spark.sql.SparkSession,
                       path: String, statsCol: Option[String]): Int = {
@@ -890,11 +892,34 @@ object SinkOps {
           resolved.repartition(pc.map(col): _*), path, pc,
           carryForward = false)
       case None =>
-        val clustered = statsCol.fold(resolved)(c =>
-          resolved.repartitionByRange(col(c)))
-        commitVersion(clustered, path, carryForward = false, statsCol)
+        val statsCols = compactStatsCols(spark, path, statsCol, resolved)
+        commitVersionStats(clusterOn(resolved, statsCols), path,
+          carryForward = false, statsCols)
     }
   }
+
+  /** The zone-map columns a full compaction declares: the
+    * `OPTIMIZE ... CLUSTER BY` column when given; otherwise the head's
+    * own declaration — the header of its LAST stats-carrying data dir
+    * (manifest order is commit order), restricted to columns the
+    * resolved head still has. Nil when no head dir carries stats.
+    */
+  private def compactStatsCols(spark: org.apache.spark.sql.SparkSession,
+                               path: String, statsCol: Option[String],
+                               resolved: DataFrame): Seq[String] =
+    statsCol.fold {
+      val root = new org.apache.hadoop.fs.Path(path)
+      val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+      manifestDirs(fs, root, latestVersion(fs, root)).filterNot(isOpLine)
+        .flatMap(d => readDirStats(fs, root, d).map(_.cols))
+        .lastOption.toSeq.flatten.filter(resolved.columns.contains)
+    }(Seq(_))
+
+  /** Range-cluster a compaction's rows on its primary (first) stats
+    * column, which is what keeps the rewritten files' ranges tight.
+    */
+  private def clusterOn(df: DataFrame, statsCols: Seq[String]): DataFrame =
+    statsCols.headOption.fold(df)(c => df.repartitionByRange(col(c)))
 
   /** [[compactVersions]] with the BOUNDED OCC RETRY — the nightly
     * OPTIMIZE that loses a race to a live merge/append stream lands
@@ -930,22 +955,21 @@ object SinkOps {
       // landing after this read collides on the version number below
       // and triggers the re-pack.
       val resolved = readVersion(spark, path, Some(head))
-      val clustered = statsCol.fold(resolved)(c =>
-        resolved.repartitionByRange(col(c)))
+      val statsCols = compactStatsCols(spark, path, statsCol, resolved)
       val dataDir = s"data/c${java.util.UUID.randomUUID.toString
         .replace("-", "").take(12)}"
-      clustered.write.mode(SaveMode.Overwrite)
+      clusterOn(resolved, statsCols).write.mode(SaveMode.Overwrite)
         .parquet(new org.apache.hadoop.fs.Path(root, dataDir).toString)
-      statsCol.foreach(c =>
-        writeDirStats(spark, fs, root, dataDir, Seq(c)))
+      if (statsCols.nonEmpty)
+        writeDirStats(spark, fs, root, dataDir, statsCols)
       beforeAttempt(attempt)
       val v = math.max(head, latestStaged(fs, root)) + 1
       def lost(e: Throwable): Unit = {
         // Stale pack: built from a superseded snapshot — remove it
         // (plus its sidecars) so no orphan waits on the VACUUM grace.
         fs.delete(new org.apache.hadoop.fs.Path(root, dataDir), true)
-        statsCol.foreach(_ => fs.delete(sidecarFile(root, dataDir,
-          "stats"), false))
+        if (statsCols.nonEmpty)
+          fs.delete(sidecarFile(root, dataDir, "stats"), false)
         if (attempt >= maxTries) throw new IllegalStateException(
           s"OPTIMIZE of $path lost $maxTries version races — " +
             "concurrent-writer pressure exceeds the retry budget", e)

@@ -2,13 +2,16 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.ops._
+import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
+import org.scalatest.time.{Seconds, Span}
 
 /** Degenerate-input behavior: operators must return empty/partial results,
   * never throw, when documents are too short to shingle, corpora are
   * empty, or the query set exceeds the corpus.
   */
-class EdgeCaseSpec extends SparkSpec {
+class EdgeCaseSpec extends SparkSpec with TimeLimits {
   import spark.implicits._
+  implicit val signaler: Signaler = ThreadSignaler
 
   test("dedup ops on documents too short to shingle") {
     val tiny = Seq((1L, "a b"), (2L, "x"), (3L, "")).toDF("doc_id", "text")
@@ -294,11 +297,23 @@ class EdgeCaseSpec extends SparkSpec {
     assert(DedupOps.containmentPairs(noDocs).count() === 0)
     assert(DedupOps.noveltyStats(noDocs).count() === 0)
     assert(DedupOps.noveltyStats(nullDoc).count() === 0)
-    // graph ops: empty edge sets yield empty results, no throw
-    val noEdges = Seq.empty[(Long, Long)].toDF("src", "dst")
-    assert(GraphOps.hitsFixed(noEdges, 3).count() === 0)
-    assert(GraphOps.personalizedPageRank(noEdges, 3, 2).count() === 0)
-    assert(GraphOps.linkPredict(noEdges, 10).count() === 0)
+    // graph ops: empty edge sets yield empty results, no throw; the
+    // loops read their round scalars from observed metrics, so a
+    // metric that never arrives fails here instead of hanging
+    failAfter(Span(120, Seconds)) {
+      val noEdges = Seq.empty[(Long, Long)].toDF("src", "dst")
+      assert(GraphOps.hitsFixed(noEdges, 3).count() === 0)
+      assert(GraphOps.personalizedPageRank(noEdges, 3, 2).count() === 0)
+      assert(GraphOps.linkPredict(noEdges, 10).count() === 0)
+      assert(GraphOps.kCore(noEdges, 2).count() === 0)
+      assert(GraphOps.labelPropagation(noEdges).count() === 0)
+      // the source alone is at depth / distance 0
+      assert(GraphOps.bfsLevels(noEdges, 7L, 3).collect()
+        .map(r => (r.getLong(0), r.getInt(1))).toSeq === Seq((7L, 0)))
+      val noWeighted = Seq.empty[(Long, Long, Long)].toDF("src", "dst", "w")
+      assert(GraphOps.ssspWeighted(noWeighted, 7L, 3).collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSeq === Seq((7L, 0L)))
+    }
     val noPrior = Seq.empty[(Long, Long)].toDF("node", "rank_fp")
     // warm start with an empty prior == cold start
     val cold = GraphOps.pageRankFixed(

@@ -513,6 +513,69 @@ class GraphOpsSpec extends SparkSpec {
     val got5 = GraphOps.hitsFixed(es5.toDF("src", "dst"), 5).collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
     assert(got5 === modelHits(es5, 5))
+    // Shuffled path: with broadcasts disabled the score vector joins
+    // the edges through a shuffle, with the same rows.
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val saved = spark.conf.get(key)
+    try {
+      spark.conf.set(key, "-1")
+      val shuffled = GraphOps.hitsFixed(es5.toDF("src", "dst"), 5)
+      assert(!planText(shuffled.queryExecution.executedPlan)
+        .contains("BroadcastHashJoin"))
+      val got5s = shuffled.collect()
+        .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
+      assert(got5s === got5)
+      assert(got5s === modelHits(es5, 5))
+    } finally spark.conf.set(key, saved)
+  }
+
+  /** Waits until the listener bus has delivered every posted event. */
+  private def drainListenerBus(): Unit = {
+    val sc = spark.sparkContext
+    val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+    bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+  }
+
+  /** `body`'s result and the number of Spark jobs it started. */
+  private def countJobs[T](body: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    drainListenerBus()
+    spark.sparkContext.addSparkListener(l)
+    try {
+      val out = body
+      drainListenerBus()
+      (out, jobs.get)
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
+
+  test("graph loops spend one Spark action per round, and hitsFixed " +
+      "leaves only its two final checkpoints pinned") {
+    val edges = GraphOps.edgesFromLineitem(Tables.lineitem(spark, sfDir))
+    val sc = spark.sparkContext
+    val pinnedBefore = sc.getPersistentRDDs.keySet
+    val (hits, hitsJobs) = countJobs(GraphOps.hitsFixed(edges, 8).collect())
+    assert(hits.nonEmpty)
+    // 16 half-rounds: a score broadcast, the re-aggregation's shuffle
+    // and the checkpoint itself, plus the final join and sort.
+    assert(hitsJobs <= 3 * 16 + 10, s"hitsFixed(edges, 8) ran $hitsJobs jobs")
+    val left = sc.getPersistentRDDs.keySet -- pinnedBefore
+    assert(left.size <= 2, s"hitsFixed left ${left.size} RDDs pinned")
+    // kCore on a 4-clique with a 6-node tail: k = 2 peels the tail one
+    // node per round (7 rounds with the fixpoint check).
+    import spark.implicits._
+    val clique = for (a <- 1L to 4L; b <- (a + 1) to 4L) yield (a, b)
+    val tail = (4L to 9L).map(a => (a, a + 1))
+    val kEdges = (clique ++ tail).toDF("src", "dst")
+    val (core, coreJobs) = countJobs(GraphOps.kCore(kEdges, 2).collect())
+    assert(core.map(_.getLong(0)).toSet === Set(1L, 2L, 3L, 4L))
+    assert(coreJobs <= 3 * 7 + 8, s"kCore ran $coreJobs jobs")
+    info(s"jobs: hitsFixed $hitsJobs, kCore $coreJobs")
   }
 
   test("personalizedPageRank: seeds carry the base, non-seed no-in " +

@@ -190,6 +190,41 @@ class Round13OpsSpec extends SparkSpec {
     }
   }
 
+  test("plain OPTIMIZE, and its RETRY form, carry the head's declared " +
+      "stats columns: a later graft_version_where read still prunes") {
+    import spark.implicits._
+    val t = tmp("r13_sql_opt_plain")
+    (1L to 400L).map(i => (i, i % 20)).toDF("id", "g")
+      .createOrReplaceTempView("r13spec_opt_plain")
+    (0 to 1).foreach { r =>
+      spark.sql(s"""INSERT INTO graft_table('$t', 'id')
+          SELECT /*+ REPARTITION_BY_RANGE(4, id) */ *
+          FROM r13spec_opt_plain WHERE id % 2 = $r""").collect(); ()
+    }
+    def prunedRead(): Unit = {
+      val got = spark.sql(s"""SELECT id
+          FROM graft_version_where('$t', 'id', 50, 149)""")
+        .collect().map(_.getLong(0)).sorted
+      assert(got.sameElements(50L to 149L))
+      val (kept, total, c) = SinkOps.pruneFiles(spark, t, 50L, 149L)
+      assert(c == "id" && kept.nonEmpty && kept.size < total,
+        s"post-OPTIMIZE read pruned nothing: ${kept.size} of $total")
+    }
+    // Without AQE coalescing the 400-row rewrite keeps one file per
+    // range partition, as a table larger than one target file would.
+    val key = "spark.sql.adaptive.coalescePartitions.enabled"
+    val saved = spark.conf.getOption(key)
+    try {
+      spark.conf.set(key, "false")
+      assert(spark.sql(s"OPTIMIZE graft_table('$t')")
+        .collect().head.getInt(0) == 3)
+      prunedRead()
+      assert(spark.sql(s"OPTIMIZE graft_table('$t') RETRY 2")
+        .collect().head.getInt(0) == 4)
+      prunedRead()
+    } finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   test("the graft_stats TVF answers a DV-carrying head (routing " +
       "through statsAggDv) where the strict statsOnlyAgg refuses, and " +
       "stays bit-identical to statsOnlyAgg on a DV-free snapshot") {
